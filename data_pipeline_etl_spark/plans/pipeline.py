@@ -143,30 +143,42 @@ def run_text_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[st
     operators' building blocks; this function is the end-to-end shape a
     100 TB corpus run takes (per-stage row accounting like the genre's
     run log).
+
+    The write is the only job over the corpus. The funnel counts ride on
+    it as one ``observe`` on the row-numbered frame — after the dedup
+    window, before the row filters — so raw, deduped and quality-passing
+    rows are counted in the write's own post-shuffle result stage, where
+    Spark applies each task's metrics exactly once. A count per stage
+    would re-run the window subtree once per action. The read-back passes
+    the written schema, so it launches no schema-inference job.
     """
-    from pyspark.sql import Window
+    from pyspark.sql import Observation, Window
 
     d = table(spark, sf_dir, "documents")
-    n_raw = d.count()
 
     # 1. exact dedup on normalized content hash (keep min doc_id per hash)
     h = F.md5(F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " "))))
     w = Window.partitionBy("h").orderBy("doc_id")
-    deduped = (
-        d.withColumn("h", h)
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .drop("h", "rn")
-    )
-    n_dedup = deduped.count()
+    first = F.col("rn") == 1
 
     # 2. quality gate: enough tokens, sane type/token ratio
     toks = F.split("text", " ")
-    quality = deduped.where(
-        (F.size(toks) >= 20)
-        & (F.size(F.array_distinct(toks)) / F.size(toks).cast("double") >= 0.2)
+    good = (F.size(toks) >= 20) & (
+        F.size(F.array_distinct(toks)) / F.size(toks).cast("double") >= 0.2
     )
-    n_quality = quality.count()
+
+    funnel = Observation()
+    numbered = (
+        d.withColumn("h", h)
+        .withColumn("rn", F.row_number().over(w))
+        .observe(
+            funnel,
+            F.count(F.lit(1)).alias("raw"),
+            F.count_if(first).alias("after_dedup"),
+            F.count_if(first & good).alias("after_quality"),
+        )
+    )
+    quality = numbered.where(first).drop("h", "rn").where(good)
 
     # 3. featurize: token count + language marker + content digest
     featured = quality.select(
@@ -179,10 +191,5 @@ def run_text_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[st
 
     # 4. load: partitioned by lang (the downstream sampling key)
     featured.write.mode("overwrite").partitionBy("lang").parquet(out_dir)
-    n_written = spark.read.parquet(out_dir).count()
-    return {
-        "raw": n_raw,
-        "after_dedup": n_dedup,
-        "after_quality": n_quality,
-        "written": n_written,
-    }
+    n_written = spark.read.schema(featured.schema).parquet(out_dir).count()
+    return {**funnel.get, "written": n_written}

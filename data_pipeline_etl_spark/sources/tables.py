@@ -15,6 +15,9 @@ arriving Spark type:
 - TIMESTAMP(MICROS) (round 4 regeneration): arrives as a timestamp
   directly; only the NTZ cast applies.
 
+``normalize`` holds that dispatch for the batch loader and for the events
+stream (streaming/batch_windows.py) alike.
+
 Scale note (100 TB): reads are plain ``spark.read.parquet`` so partition
 pruning / predicate pushdown / column pruning all apply; at cluster scale
 point this at a partitioned table root instead of a single file — the
@@ -45,6 +48,8 @@ TABLE_NAMES = (
 # Logical-plan cache: keyed by (session id, sf_dir, table). DataFrames are
 # lazy; caching avoids re-reading parquet footers per query, not data.
 _CACHE: dict[tuple[int, str, str], DataFrame] = {}
+# The same reads before normalize(); non-events entries are shared with _CACHE.
+_RAW: dict[tuple[int, str, str], DataFrame] = {}
 
 
 def fanout(df: DataFrame) -> DataFrame:
@@ -69,26 +74,39 @@ def fanout(df: DataFrame) -> DataFrame:
     return df
 
 
+def raw_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The parquet read with the types as they arrive, cached per session.
+
+    Its schema is what a stream over the same file must declare: a
+    readStream takes no inferred schema, and reading it from this cached
+    frame spares every caller the schema-inference job a fresh
+    ``spark.read.parquet`` launches.
+    """
+    key = (id(spark), sf_dir.rstrip("/"), name)
+    if key not in _RAW:
+        configure(spark)
+        _RAW[key] = spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
+    return _RAW[key]
+
+
+def normalize(name: str, df: DataFrame) -> DataFrame:
+    """Surface a raw read of table ``name``, batch or stream, with the
+    loader's types: the ``events.ts`` arriving-type dispatch (module
+    docstring); every other table passes through unchanged."""
+    if name != "events":
+        return df
+    if isinstance(df.schema["ts"].dataType, LongType):
+        # ns long → µs (exact integer div) → NTZ (UTC session).
+        return df.withColumn(
+            "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
+        )
+    return df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     key = (id(spark), sf_dir.rstrip("/"), name)
     if key not in _CACHE:
-        configure(spark)
-        path = f"{sf_dir.rstrip('/')}/{name}.parquet"
-        df = spark.read.parquet(path)
-        if name == "events":
-            # Fixture generations have shipped ts as INT64 TIMESTAMP(NANOS)
-            # (arrives as a ns long under nanosAsLong=true) AND as plain
-            # TIMESTAMP(MICROS) (arrives as a timestamp already) — dispatch
-            # on the arriving type instead of assuming one generation.
-            if isinstance(df.schema["ts"].dataType, LongType):
-                # ns long → µs (exact integer div) → NTZ (UTC session).
-                df = df.withColumn(
-                    "ts",
-                    F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz"),
-                )
-            else:
-                df = df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-        _CACHE[key] = df
+        _CACHE[key] = normalize(name, raw_table(spark, sf_dir, name))
     return _CACHE[key]
 
 

@@ -19,7 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_pipeline_etl_spark.registry import query
-from data_pipeline_etl_spark.sources.tables import table
+from data_pipeline_etl_spark.sources.tables import normalize, raw_table, table
+from data_pipeline_etl_spark.streaming.jobs import run_to_memory_sink
 
 
 @query(
@@ -303,36 +304,33 @@ def q_time_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MEM_SINK_SEQ = iter(range(10**9))
 
 
-def _events_stream(spark: SparkSession, sf_dir: str):
-    """readStream over the events fixture with the same arriving-type
-    dispatch as sources/tables.py: fixture generations ship ts as INT64
-    TIMESTAMP(NANOS) (arrives BIGINT under nanosAsLong) or
-    TIMESTAMP(MICROS) (arrives timestamp) — probe the footer via a batch
-    read (metadata-only) and declare the matching streaming schema."""
-    from data_pipeline_etl_spark.session import configure
-    from pyspark.sql.types import LongType
-
-    configure(spark)  # nanosAsLong for the raw events.parquet read
-    raw_ts = (
-        spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet").schema["ts"].dataType
-    )
-    ns_long = isinstance(raw_ts, LongType)
-    schema = (
-        f"event_id BIGINT, ts {'BIGINT' if ns_long else 'TIMESTAMP_NTZ'}, "
-        "user_id BIGINT, event_type STRING, value DOUBLE, props STRING"
-    )
+def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """readStream over the events fixture, typed like the batch loader: the
+    stream declares the session-cached raw read's schema and applies the
+    same arriving-type dispatch (sources/tables.py), so a build launches
+    no schema-inference job after the session's first."""
+    raw = raw_table(spark, sf_dir, "events")
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(raw.schema)
         # the file source requires a directory; pathGlobFilter selects the
         # events file out of the fixture dir
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir.rstrip("/"))
     )
-    if ns_long:
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
-        )
-    return stream
+    return normalize("events", stream)
+
+
+def _drain(stream_df: DataFrame, name: str, output_mode: str) -> DataFrame:
+    """Drain a live query to a fresh memory sink and return the sink's
+    rows. The frame is resolved before the sink's temp view is dropped, so
+    it keeps reading every row while repeated calls leave no view behind
+    in the session catalog."""
+    spark = stream_df.sparkSession
+    qname = f"mem_{name}_{next(_MEM_SINK_SEQ)}"
+    run_to_memory_sink(stream_df, qname, output_mode)
+    out = spark.table(qname)
+    spark.catalog.dropTempView(qname)
+    return out
 
 
 @query(
@@ -359,8 +357,6 @@ def q_stream_tumbling_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     is |windows × event_types|, not |events|. (Eager by necessity — a
     streaming query must run to produce its result table.)
     """
-    from data_pipeline_etl_spark.streaming.jobs import run_to_memory_sink
-
     stream = _events_stream(spark, sf_dir)
     agg = (
         stream.groupBy(F.window("ts", "1 day").alias("w"), "event_type")
@@ -372,9 +368,7 @@ def q_stream_tumbling_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total",
         )
     )
-    qname = f"mem_tumbling_live_{next(_MEM_SINK_SEQ)}"
-    run_to_memory_sink(agg, qname, output_mode="complete")
-    return spark.table(qname)
+    return _drain(agg, "tumbling_live", "complete")
 
 
 @query(
@@ -398,16 +392,12 @@ def q_stream_dedup_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropDuplicatesWithinWatermark (tests/test_streaming.py exercises the
     watermarked variant).
     """
-    from data_pipeline_etl_spark.streaming.jobs import run_to_memory_sink
-
     dedup = (
         _events_stream(spark, sf_dir)
         .select("user_id", "event_type")
         .dropDuplicates(["user_id", "event_type"])
     )
-    qname = f"mem_dedup_live_{next(_MEM_SINK_SEQ)}"
-    run_to_memory_sink(dedup, qname, output_mode="append")
-    return spark.table(qname)
+    return _drain(dedup, "dedup_live", "append")
 
 
 @query(
@@ -460,8 +450,6 @@ def q_stream_late_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from data_pipeline_etl_spark.streaming.jobs import run_to_memory_sink
-
     e = table(spark, sf_dir, "events")
     cut = F.lit("2024-01-15 00:00:00").cast("timestamp_ntz")
     split = F.lit("2024-01-20 00:00:00").cast("timestamp_ntz")
@@ -506,10 +494,8 @@ def q_stream_late_live(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "total",
             )
         )
-        qname = f"mem_late_live_{next(_MEM_SINK_SEQ)}"
-        run_to_memory_sink(agg, qname, output_mode="append")
         # the memory sink is fully materialized; the staged files can go
-        return spark.table(qname)
+        return _drain(agg, "late_live", "append")
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -550,8 +536,6 @@ def q_stream_session_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     |users × sessions|, capped with a watermark in production
     (complete mode here because the fixture is a bounded backlog).
     """
-    from data_pipeline_etl_spark.streaming.jobs import run_to_memory_sink
-
     stream = _events_stream(spark, sf_dir)
     um = F.unix_micros(F.col("ts").cast("timestamp"))
     agg = (
@@ -563,9 +547,7 @@ def q_stream_session_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("user_id", "sess_start", "n_events", "dur_us")
     )
-    qname = f"mem_session_live_{next(_MEM_SINK_SEQ)}"
-    run_to_memory_sink(agg, qname, output_mode="complete")
-    return spark.table(qname)
+    return _drain(agg, "session_live", "complete")
 
 
 @query(
@@ -675,8 +657,6 @@ def q_stream_sliding_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     a watermark bounds how long a window row stays in state, and the
     file source swaps for Kafka with the pipeline unchanged.
     """
-    from data_pipeline_etl_spark.streaming.jobs import run_to_memory_sink
-
     stream = _events_stream(spark, sf_dir)
     agg = (
         stream.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
@@ -687,9 +667,7 @@ def q_stream_sliding_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    qname = f"mem_sliding_live_{next(_MEM_SINK_SEQ)}"
-    run_to_memory_sink(agg, qname, output_mode="complete")
-    return spark.table(qname)
+    return _drain(agg, "sliding_live", "complete")
 
 
 @query(
@@ -728,8 +706,6 @@ def q_stream_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output is integer-only (ids + whole-second gap), so the hash check
     is immune to timestamp canonicalization differences.
     """
-    from data_pipeline_etl_spark.streaming.jobs import run_to_memory_sink
-
     def side(alias_id: str, etype: str, ts_name: str):
         s = _events_stream(spark, sf_dir).where(F.col("event_type") == etype)
         return s.select(
@@ -750,9 +726,7 @@ def q_stream_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         "click_id",
         F.expr("(unix_micros(p_ts) - unix_micros(c_ts)) div 1000000").alias("gap_sec"),
     )
-    qname = f"mem_join_live_{next(_MEM_SINK_SEQ)}"
-    run_to_memory_sink(joined, qname, output_mode="append")
-    return spark.table(qname)
+    return _drain(joined, "join_live", "append")
 
 
 @query(
@@ -797,18 +771,13 @@ def q_stream_state_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the declared Python surface by design — the plan gate
     allowlists it next to the other UDF-surface queries.
     """
-    from data_pipeline_etl_spark.streaming.jobs import (
-        longest_run_per_user,
-        run_to_memory_sink,
-    )
+    from data_pipeline_etl_spark.streaming.jobs import longest_run_per_user
 
     stream = _events_stream(spark, sf_dir).select(
         "user_id", F.col("ts").cast("timestamp").alias("ts"), "event_id", "event_type"
     )
     counted = longest_run_per_user(stream)
-    qname = f"mem_state_live_{next(_MEM_SINK_SEQ)}"
-    run_to_memory_sink(counted, qname, output_mode="update")
-    return spark.table(qname)
+    return _drain(counted, "state_live", "update")
 
 
 @query(
@@ -850,8 +819,6 @@ def q_stream_cdc_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself has. Output timestamps are integer microseconds per the
     live family's canonicalization discipline.
     """
-    from data_pipeline_etl_spark.streaming.jobs import run_to_memory_sink
-
     stream = _events_stream(spark, sf_dir).select(
         "user_id", F.col("ts").cast("timestamp").alias("ts"),
         "event_id", "event_type", "value",
@@ -871,9 +838,7 @@ def q_stream_cdc_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("last.value").alias("last_value"),
         )
     )
-    qname = f"mem_cdc_live_{next(_MEM_SINK_SEQ)}"
-    run_to_memory_sink(merged, qname, output_mode="update")
-    return spark.table(qname)
+    return _drain(merged, "cdc_live", "update")
 
 
 @query(
@@ -1162,8 +1127,6 @@ def q_stream_topk_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     happens BEFORE the sort on both engines so the cut line is the
     same rounded value cross-engine.
     """
-    from data_pipeline_etl_spark.streaming.jobs import run_to_memory_sink
-
     agg = (
         _events_stream(spark, sf_dir)
         .groupBy("user_id")
@@ -1171,9 +1134,7 @@ def q_stream_topk_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("total"), "user_id")
         .limit(10)
     )
-    qname = f"mem_topk_live_{next(_MEM_SINK_SEQ)}"
-    run_to_memory_sink(agg, qname, output_mode="complete")
-    return spark.table(qname)
+    return _drain(agg, "topk_live", "complete")
 
 
 @query(
@@ -1364,8 +1325,6 @@ def q_stream_psi_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_profile_psi's — one oracle text serves both (quality._PSI_ORACLE).
     """
     from data_pipeline_etl_spark.operators.quality import psi_from_counts
-    from data_pipeline_etl_spark.streaming.jobs import run_to_memory_sink
-
     counts = (
         _events_stream(spark, sf_dir)
         .select(
@@ -1376,13 +1335,13 @@ def q_stream_psi_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "bucket")
         .agg(F.sum("is_a").alias("n_a"), F.sum(1 - F.col("is_a")).alias("n_b"))
     )
-    qname = f"mem_psi_live_{next(_MEM_SINK_SEQ)}"
-    run_to_memory_sink(counts, qname, output_mode="complete")
     # lazy localCheckpoint: psi_from_counts self-joins its input (spine
     # derivation + left join), and two references to one MemorySink view
     # trip Spark 4.1's analyzer with conflicting attribute ids; the
     # checkpoint renumbers the leaf. The frame is |types| x 10 rows.
-    return psi_from_counts(spark.table(qname).localCheckpoint(eager=False))
+    return psi_from_counts(
+        _drain(counts, "psi_live", "complete").localCheckpoint(eager=False)
+    )
 
 
 _CONCURRENCY_ORACLE = """
@@ -1517,22 +1476,18 @@ def q_stream_concurrency_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     holds exactly the batch interval frame, so the curve equals
     q_time_concurrency's — one oracle text serves both.
     """
-    from data_pipeline_etl_spark.streaming.jobs import run_to_memory_sink
-
     iv = (
         _events_stream(spark, sf_dir)
         .groupBy("user_id", F.date_trunc("day", "ts").alias("d"))
         .agg(F.min("ts").alias("s"), F.max("ts").alias("e"))
     )
-    qname = f"mem_concurrency_live_{next(_MEM_SINK_SEQ)}"
-    run_to_memory_sink(iv, qname, output_mode="complete")
     # lazy localCheckpoint: concurrency_from_intervals references the
     # interval frame twice (start- and end-delta branches of the union),
     # and two references to one MemorySink view trip Spark 4.1's
     # analyzer with conflicting attribute ids; the checkpoint renumbers
     # the leaf (the q_stream_psi_live workaround).
     return concurrency_from_intervals(
-        spark.table(qname).localCheckpoint(eager=False)
+        _drain(iv, "concurrency_live", "complete").localCheckpoint(eager=False)
     )
 
 

@@ -17,6 +17,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 
 def events_file_stream(spark: SparkSession, src_dir: str, with_watermark: str | None = None) -> DataFrame:
@@ -60,40 +61,41 @@ def dedup_within_watermark(df: DataFrame) -> DataFrame:
 
 
 def run_to_memory_sink(
-    stream_df: DataFrame,
-    query_name: str,
-    output_mode: str = "complete",
-    state_partitions: int = 8,
-) -> None:
+    stream_df: DataFrame, query_name: str, output_mode: str = "complete"
+) -> StreamingQuery:
     """Execute a streaming query to an in-memory sink until the file
-    backlog is drained (availableNow trigger).
+    backlog is drained (availableNow trigger); return the terminated query.
 
-    ``state_partitions`` sizes the streaming state store: stateful
+    The drain's state store gets ``min(8, cores)`` partitions. Stateful
     operators partition their state by ``spark.sql.shuffle.partitions``
     *as captured when the query starts*, and every micro-batch commits a
     delta file per state partition per stateful operator. The batch
-    default (32 here) is sized for shuffle parallelism, not state
-    commits — at fixture scale it means 32 near-empty state files per
-    batch, and on a cluster the same mismatch shows up as thousands of
-    tiny checkpoint objects. 8 keeps the drain parallel while cutting
-    the fixed commit overhead 4x (measured: the 7 live queries fall
-    ~17.3s -> ~10s total at sf0.1). The knob only affects physical
-    state layout — values are identical for any setting — and is
-    restored immediately after the drain so batch queries keep the
-    session default.
+    setting is sized for shuffle parallelism on the host (32 on a 32-core
+    host, whatever a caller's session carries), which is the wrong knob:
+    state partitions past the session's core count only add commits that
+    wait for a free core, and past 8 they are near-empty files at fixture
+    scale (and thousands of tiny checkpoint objects on a cluster). The cap
+    of 8 keeps an 8+-core drain parallel; below 8 cores the drain uses one
+    state partition per core (measured at sf0.01 on 4 vCPUs with
+    local[2], median of 7 alternating reps: the 11 ``*_live`` queries
+    23.3 s -> 16.0 s total with 8 -> 2 partitions, q_stream_tumbling_live
+    1.13 s -> 0.86 s). The setting only affects physical state layout — values are
+    identical for any count — and is restored right after the drain, so
+    batch queries keep the session default.
 
     CONCURRENCY ASSUMPTION: the shuffle-partition override is a
     session-global conf mutation for the duration of the drain — any
     batch query planned concurrently on the same SparkSession would
-    plan with ``state_partitions`` partitions during that window.
-    The repo's flows (tests, bench, driver) run queries sequentially,
-    so this is safe here; a concurrent caller must isolate the drain
-    on ``spark.newSession()`` (confs are per-session) instead. On a real cluster you size it to
-    |cores| .. |state volume / target partition size|, and it is FIXED
-    for the life of a checkpoint (changing it requires a state rebuild
-    — Spark refuses to reload state across a partition-count change).
+    plan with the drain's partition count during that window. The
+    repo's flows (tests, bench, driver) run queries sequentially, so
+    this is safe here; a concurrent caller must isolate the drain on
+    ``spark.newSession()`` (confs are per-session) instead. On a real
+    cluster the count is FIXED for the life of a checkpoint (changing it
+    requires a state rebuild — Spark refuses to reload state across a
+    partition-count change), so size it up front.
     """
     spark = stream_df.sparkSession
+    state_partitions = min(8, spark.sparkContext.defaultParallelism)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
@@ -107,6 +109,7 @@ def run_to_memory_sink(
         q.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return q
 
 
 def run_foreach_batch_parquet(

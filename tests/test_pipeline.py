@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 from data_pipeline_etl_spark.plans import pipeline
 from data_pipeline_etl_spark.sources.tables import table
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, count_jobs
 
 
 def test_full_etl_run(spark, tmp_path):
@@ -82,15 +82,49 @@ def test_merge_upsert_idempotent(spark):
     assert sorted(map(tuple, once.collect())) == sorted(map(tuple, twice.collect()))
 
 
-def test_text_pipeline_composition(spark, tmp_path):
+# The text pipeline's funnel restated in DuckDB over the same parquet file.
+_TEXT_FUNNEL_SQL = r"""
+WITH d AS (
+  SELECT doc_id, text,
+         row_number() OVER (
+           PARTITION BY md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))))
+           ORDER BY doc_id) AS rn
+  FROM read_parquet('{path}')),
+dedup AS (SELECT text FROM d WHERE rn = 1),
+kept AS (
+  SELECT * FROM dedup
+  WHERE len(string_split(text, ' ')) >= 20
+    AND len(list_distinct(string_split(text, ' ')))::DOUBLE
+        / len(string_split(text, ' ')) >= 0.2)
+SELECT (SELECT count(*) FROM d) AS raw,
+       (SELECT count(*) FROM dedup) AS after_dedup,
+       (SELECT count(*) FROM kept) AS after_quality,
+       (SELECT count(*) FROM kept) AS written
+"""
+
+
+def test_text_pipeline_composition(spark, duck, tmp_path):
     out = str(tmp_path / "corpus")
     counts = pipeline.run_text_pipeline(spark, SF_DIR, out)
-    # monotone funnel, nothing lost at the write
-    assert counts["raw"] >= counts["after_dedup"] >= counts["after_quality"]
-    assert counts["written"] == counts["after_quality"]
+    # every funnel count, observed or read back, equals the oracle's
+    row = duck.sql(_TEXT_FUNNEL_SQL.format(path=f"{SF_DIR}/documents.parquet")).df()
+    want = {k: int(v) for k, v in row.iloc[0].items()}
+    assert counts == want
     assert counts["after_quality"] > 0
     # partition layout by lang prunes
     back = spark.read.parquet(out)
     assert set(back.columns) == {"doc_id", "lang", "source", "n_tokens", "digest"}
     plan = back.where(F.col("lang") == "en")._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
+
+
+def test_text_pipeline_job_budget(spark, tmp_path):
+    """One call is one write job plus a schema-given read-back: at most 4
+    Spark jobs (AQE runs the shuffle map stage of each as a job of its
+    own). A count per funnel stage re-runs the dedup window per action,
+    and a read-back without a schema adds an inference job."""
+    table(spark, SF_DIR, "documents")  # the session's source read, shared
+    _, n_jobs = count_jobs(
+        spark, lambda: pipeline.run_text_pipeline(spark, SF_DIR, str(tmp_path / "corpus"))
+    )
+    assert n_jobs <= 4, n_jobs

@@ -4,7 +4,7 @@ The round-4 fixture regeneration silently switched events.ts from INT64
 TIMESTAMP(NANOS) to TIMESTAMP(MICROS) — an unconditional ns->µs division
 then broke every events query. These tests synthesize BOTH generations
 and pin that the loader's arriving-type dispatch yields identical NTZ
-timestamps either way.
+timestamps either way, for the batch loader and the events stream alike.
 """
 
 from __future__ import annotations
@@ -17,6 +17,8 @@ import pyarrow.parquet as pq
 import pytest
 
 from data_pipeline_etl_spark.sources import tables as T
+from data_pipeline_etl_spark.streaming.batch_windows import _events_stream
+from data_pipeline_etl_spark.streaming.jobs import run_to_memory_sink
 
 
 _TS = [
@@ -50,11 +52,18 @@ def test_events_ts_dispatch_all_generations(spark, tmp_path, unit):
     sf_dir = tmp_path / f"gen_{unit}"
     sf_dir.mkdir()
     _write_events(str(sf_dir), unit)
-    df = T.table(spark, str(sf_dir), "events")
-    assert str(df.schema["ts"].dataType) == "TimestampNTZType()"
-    got = sorted(r["ts"] for r in df.select("ts").collect())
     if unit == "ms":
         want = [t.replace(microsecond=t.microsecond // 1000 * 1000) for t in _TS]
     else:
         want = _TS
+    df = T.table(spark, str(sf_dir), "events")
+    assert str(df.schema["ts"].dataType) == "TimestampNTZType()"
+    got = sorted(r["ts"] for r in df.select("ts").collect())
     assert got == want, (unit, got)
+
+    # the live queries' stream over the same file drains to the same values
+    stream = _events_stream(spark, str(sf_dir))
+    assert str(stream.schema["ts"].dataType) == "TimestampNTZType()"
+    run_to_memory_sink(stream.select("ts"), f"ts_gen_{unit}", "append")
+    got = sorted(r["ts"] for r in spark.table(f"ts_gen_{unit}").collect())
+    assert got == want, (unit, "stream", got)

@@ -19,7 +19,8 @@ from pyspark.sql import functions as F
 
 from data_pipeline_etl_spark.sources.tables import table
 from data_pipeline_etl_spark.streaming import jobs
-from tests.conftest import SF_DIR
+from data_pipeline_etl_spark.streaming.batch_windows import _events_stream
+from tests.conftest import SF_DIR, count_jobs
 
 EVENT_COLS = (
     "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
@@ -74,6 +75,45 @@ def test_stream_session_equals_batch(spark, events_stream_dir):
         ).collect()
     }
     assert streamed == batch
+
+
+def test_drain_state_sized_to_cores_and_conf_restored(spark):
+    """The drain's state store gets min(8, cores) partitions, and the
+    session's shuffle-partition setting is back to its prior value after."""
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "13")  # above min(8, cores), so no drain picks it
+    try:
+        q = jobs.run_to_memory_sink(
+            jobs.tumbling_counts(_events_stream(spark, SF_DIR)), "sized_mem", "complete"
+        )
+        assert spark.conf.get(key) == "13"
+    finally:
+        spark.conf.set(key, before)
+    assert not q.isActive
+    want = min(8, spark.sparkContext.defaultParallelism)
+    assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == want
+    assert spark.table("sized_mem").count() > 0
+
+
+def test_events_stream_rebuild_launches_no_job(spark):
+    """The events stream takes its schema from the session-cached raw
+    read: once the session has read it, building the stream again
+    launches no Spark job."""
+    _events_stream(spark, SF_DIR)
+    _, n_jobs = count_jobs(spark, lambda: _events_stream(spark, SF_DIR))
+    assert n_jobs == 0
+
+
+def test_live_queries_leave_no_sink_view(spark):
+    """Each *_live call drains into a fresh memory sink; the returned frame
+    keeps every row while the sink's temp view is gone from the catalog."""
+    from data_pipeline_etl_spark.registry import QUERIES, load_all_operators
+
+    load_all_operators()
+    frames = [QUERIES["q_stream_tumbling_live"](spark, SF_DIR) for _ in range(2)]
+    assert not [t.name for t in spark.catalog.listTables() if t.name.startswith("mem_")]
+    assert frames[0].count() == frames[1].count() > 0
 
 
 def test_watermark_drops_late_rows(spark, tmp_path):
